@@ -8,6 +8,17 @@ import org.apache.spark.sql.SparkSession
   * Round dir via SPARK_GRAFT_PLANDIR (default plans/r15).
   */
 object PlanDump {
+
+  /** Parses SPARK_GRAFT_CONF: comma-separated `key=value` tokens. */
+  def parseConf(spec: String): Seq[(String, String)] =
+    spec.split(",").toSeq.map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) => k -> v
+        case _ => throw new IllegalArgumentException(
+          s"SPARK_GRAFT_CONF token '$kv' is not key=value")
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -19,8 +30,8 @@ object PlanDump {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // optional session confs, e.g. SPARK_GRAFT_CONF="spark.sql.files.maxPartitionBytes=8192"
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v)
+    sys.env.get("SPARK_GRAFT_CONF").foreach(parseConf(_).foreach {
+      case (k, v) => spark.conf.set(k, v)
     })
     val tag = args(0)
     val names = args(1).split(",").toSeq

@@ -25,6 +25,13 @@ class ContractSpec extends AnyFunSuite {
     assert(unchecked.isEmpty, s"queries without oracle coverage: $unchecked")
   }
 
+  test("contract names are unique across the family lists") {
+    // toMap would keep only the last of two same-named contracts
+    val dups = SparkEntry.contracts.groupBy(_.name).collect { case (n, cs) if cs.size > 1 => n }
+    assert(dups.isEmpty, s"duplicate contract names: $dups")
+    assert(SparkEntry.contracts.size == 257)
+  }
+
   test("entry() returns rows on a plain session (driver smoke)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

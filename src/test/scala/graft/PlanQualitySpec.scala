@@ -86,6 +86,30 @@ class PlanQualitySpec extends AnyFunSuite {
     }
   }
 
+  test("spread guard: an exchange-free scan passes through the probe") {
+    import org.apache.spark.sql.functions.col
+    val scan = spark.read.parquet(s"$dir/orders.parquet")
+    // narrow demo scan: spread by key, or round-robin without keys
+    for (spread <- Seq(contracts.Shared.spreadIfNarrow(scan, col("o_orderkey")),
+        contracts.Shared.spreadIfNarrow(scan))) {
+      val p = spread.queryExecution.executedPlan.toString
+      assert(p.contains("REPARTITION_BY_NUM"), s"expected the spread exchange:\n$p")
+    }
+    // already at >= core-count partitions: returned as is
+    val wide = spark.range(0, 100, 1, 8).toDF()
+    assert(contracts.Shared.spreadIfNarrow(wide, col("id")) eq wide)
+  }
+
+  test("spread guard: a shuffled input is rejected before the probe") {
+    import org.apache.spark.sql.functions.col
+    val scan = spark.read.parquet(s"$dir/orders.parquet")
+    for (shuffled <- Seq(scan.groupBy(col("o_custkey")).count(), scan.repartition(3))) {
+      val e = intercept[IllegalArgumentException](
+        contracts.Shared.spreadIfNarrow(shuffled, col("o_custkey")))
+      assert(e.getMessage.contains("needs an exchange-free input"), e.getMessage)
+    }
+  }
+
   test("MERGE hint overrides the broadcast choice the tiny side would win") {
     val p = plan("q_join_hints")
     assert(p.contains("SortMergeJoin"), s"MERGE hint ignored:\n$p")

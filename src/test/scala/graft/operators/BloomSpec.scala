@@ -33,14 +33,21 @@ class BloomSpec extends AnyFunSuite {
     val ref = spark.createDataset(seen).toDF("u")
     val big = spark.createDataset(mixed).toDF("u")
     // tight fpp=0.25 sizing forces REAL false positives through the
-    // confirm join — the routing, not a lucky clean bloom, is under test
-    val pruned = BloomTools.prunedAntiJoin(big, "u", ref, "u",
-      expectedItems = 20000, fpp = 0.25)
-      .collect().map(_.getString(0)).sorted
-    val exact = big.join(ref, Seq("u"), "left_anti")
-      .collect().map(_.getString(0)).sorted
-    assert(pruned.sameElements(exact))
-    assert(exact.length == 20000)
+    // confirm join — the routing, not a lucky clean bloom, is under test.
+    // Run once as planned and once with broadcast off: the operator's
+    // regime is a seen set too big to broadcast, which forces shuffle joins.
+    for (threshold <- Seq(None, Some("-1"))) {
+      threshold.foreach(spark.conf.set("spark.sql.autoBroadcastJoinThreshold", _))
+      try {
+        val pruned = BloomTools.prunedAntiJoin(big, "u", ref, "u",
+          expectedItems = 20000, fpp = 0.25)
+          .collect().map(_.getString(0)).sorted
+        val exact = big.join(ref, Seq("u"), "left_anti")
+          .collect().map(_.getString(0)).sorted
+        assert(pruned.sameElements(exact), s"broadcast threshold $threshold")
+        assert(exact.length == 20000)
+      } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
   }
 
   test("prunedAntiJoin keeps every column of the big side") {
