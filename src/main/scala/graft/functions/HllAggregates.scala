@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggreg
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.trees.{UnaryLike, BinaryLike}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Catalyst aggregate/scalar expressions exposing the reference's HLL
@@ -61,8 +62,15 @@ abstract class HllAggBase[R] extends TypedImperativeAggregate[HllSketch]
   override def update(buffer: HllSketch, input: InternalRow): HllSketch = {
     val v = child.eval(input)
     if (v != null) {
-      val b = v.asInstanceOf[UTF8String].getBytes
-      buffer.updateBytes(b, 0, b.length)
+      // digest straight from the string's backing array; copy only off-heap
+      val s = v.asInstanceOf[UTF8String]
+      s.getBaseObject match {
+        case arr: Array[Byte] =>
+          buffer.updateBytes(arr, (s.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt, s.numBytes)
+        case _ =>
+          val b = s.getBytes
+          buffer.updateBytes(b, 0, b.length)
+      }
     }
     buffer
   }

@@ -1,14 +1,17 @@
 package graft.functions
 
+import java.math.{BigDecimal => JBigDecimal, MathContext, RoundingMode}
+
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** `python_str(double)` -> STRING: Python's `str(float)` rendering, for
-  * bit-parity with the reference's `str(element)` coercion before hashing
-  * (HLL/HyperLogLog.py:110).
+/** `python_str(double)` -> STRING: Python 3's `str(float)` (= `repr`)
+  * rendering, for bit-parity with the reference's `str(element)` coercion
+  * before hashing (HLL/HyperLogLog.py:110). The goldens were produced with
+  * Python 3; Python 2.7's `str(float)` is `%.12g` and is not the target.
   *
   * Spark's `CAST(d AS STRING)` follows Java conventions, which diverge from
   * Python in exactly the ways that change SHA-1 inputs:
@@ -17,42 +20,87 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - exponent spelling: Python `1e+16` / `5e-324`, Java `1.0E16` / `4.9E-324`;
   *  - specials: Python `inf` / `-inf` / `nan`, Java `Infinity` / `NaN`;
   *  - digit selection: Python repr is the SHORTEST decimal that round-trips
-  *    (correctly rounded); Java 17's historical algorithm occasionally emits
-  *    a different digit string (e.g. subnormals).
+  *    and, among those, the one closest to the exact binary value; Java 17's
+  *    `Double.toString` occasionally emits a different digit string.
   *
-  * Digits are found exactly as CPython does: the smallest precision p in
-  * [1, 17] whose correctly-rounded p-digit scientific form parses back to
-  * the original bits, then formatted with Python's placement rules.
+  * The digits come from exact arithmetic only, on one of two paths:
+  *  - Short decimals, 1e-7 <= |v| < 1e15: for s = 0, 1, ... (s <= 22) while
+  *    |v| * 10^s < 1e15, take d = rint(|v| * 10^s) and accept the first s
+  *    with d / 10^s == |v|. Both d (< 2^53) and 10^s are exact doubles and
+  *    IEEE division rounds correctly, so a match is a decimal that
+  *    round-trips. A 15-digit decimal grid is coarser than the round-trip
+  *    interval, so at most one candidate fits at each s, and the rounded
+  *    product lands within 0.22 of it: the first match is CPython's
+  *    shortest string. Every decimal of at most 15 significant digits is
+  *    examined somewhere in that range, so a miss means 16 or 17 digits.
+  *  - Everything else: the smallest p (from 16 after a fast-path miss,
+  *    else from 1) whose correctly rounded p-digit value
+  *    `new BigDecimal(|v|).round(p, HALF_EVEN)` parses back to |v|. At a
+  *    power of two the gap below is half the gap above, so the nearest
+  *    p-digit value can fall outside the narrow side while the one above
+  *    still round-trips; there the round-up neighbour is tried too.
+  *
+  * Java's `%.{p-1}e` formatter (String.format) cannot stand in for the
+  * rounding: it rounds from `Double.toString`'s digit string rather than the
+  * exact binary value, so the result is rounded twice. Probing with it
+  * renders `982321484631736448.0` as `9.823214846317365e+17` where Python
+  * gives `9.823214846317364e+17` (the exact tail ...6448 rounds down).
   */
 object PythonStr {
 
+  /** 10^0 .. 10^22: every one an exact double. */
+  private val Pow10: Array[Double] = Array.tabulate(23)(i => ("1e" + i).toDouble)
+
   /** Python `str(double)`. */
-  def render(v: Double): String = {
-    if (java.lang.Double.isNaN(v)) return "nan"
-    if (v == Double.PositiveInfinity) return "inf"
-    if (v == Double.NegativeInfinity) return "-inf"
-    if (v == 0.0) return if (1.0 / v < 0) "-0.0" else "0.0"
+  def render(v: Double): String = format(v).toString
+
+  /** Python `str(double)` as ASCII (hence UTF-8) bytes. */
+  def renderBytes(v: Double): Array[Byte] = {
+    val sb = format(v)
+    val out = new Array[Byte](sb.length)
+    var i = 0
+    while (i < out.length) { out(i) = sb.charAt(i).toByte; i += 1 }
+    out
+  }
+
+  private def format(v: Double): java.lang.StringBuilder = {
+    val sb = new java.lang.StringBuilder(32)
+    if (java.lang.Double.isNaN(v)) return sb.append("nan")
+    if (v == Double.PositiveInfinity) return sb.append("inf")
+    if (v == Double.NegativeInfinity) return sb.append("-inf")
+    if (v == 0.0) return sb.append(if (1.0 / v < 0) "-0.0" else "0.0")
     val neg = v < 0
     val a = math.abs(v)
-    // shortest correctly-rounded digit string via round-trip probing
-    var digits: String = null
-    var exp = 0
-    var p = 1
-    while (digits == null && p <= 17) {
-      val s = String.format("%." + (p - 1) + "e", Double.box(a))
-      if (java.lang.Double.parseDouble(s) == a) {
-        val ei = s.indexOf('e')
-        exp = Integer.parseInt(s.substring(ei + 1))
-        digits = s.substring(0, ei).replace(".", "")
-        // trailing zeros from the fixed-precision format are not part of
-        // the shortest form ("1.500e+00" -> "15")
-        var end = digits.length
-        while (end > 1 && digits.charAt(end - 1) == '0') end -= 1
-        digits = digits.substring(0, end)
+    // shortest round-tripping decimal: significand d, d * 10^-scale == a
+    var d = -1L
+    var scale = 0
+    val fast = a >= 1e-7 && a < 1e15
+    if (fast) {
+      var s = 0
+      while (d < 0 && s <= 22 && a * Pow10(s) < 1e15) {
+        val r = math.rint(a * Pow10(s))
+        if (r / Pow10(s) == a) { d = r.toLong; scale = s }
+        s += 1
       }
-      p += 1
     }
-    val sb = new java.lang.StringBuilder(32)
+    if (d < 0) {
+      val exact = new JBigDecimal(a)
+      val bits = java.lang.Double.doubleToRawLongBits(a)
+      val narrowBelow = (bits & ((1L << 52) - 1)) == 0 && (bits >>> 52) > 1
+      var p = if (fast) 16 else 1
+      while (d < 0) {
+        var r = exact.round(new MathContext(p, RoundingMode.HALF_EVEN))
+        if (r.doubleValue != a && narrowBelow)
+          r = exact.round(new MathContext(p, RoundingMode.CEILING))
+        if (r.doubleValue == a) { d = r.unscaledValue.longValue; scale = r.scale }
+        p += 1
+      }
+    }
+    // trailing zeros are not part of the shortest form (1500.0 -> "15")
+    var zeros = 0
+    while (d % 10 == 0) { d /= 10; zeros += 1 }
+    val digits = java.lang.Long.toString(d)
+    val exp = digits.length + zeros - 1 - scale
     if (neg) sb.append('-')
     if (exp >= -4 && exp < 16) {
       // positional notation
@@ -78,7 +126,7 @@ object PythonStr {
       if (ae < 10) sb.append('0')
       sb.append(ae)
     }
-    sb.toString
+    sb
   }
 }
 
@@ -113,7 +161,7 @@ case class PythonStr(child: Expression)
   override def dataType: DataType = StringType
 
   override def nullSafeEval(v: Any): Any =
-    UTF8String.fromString(PythonStr.render(v.asInstanceOf[Double]))
+    UTF8String.fromBytes(PythonStr.renderBytes(v.asInstanceOf[Double]))
 
   override protected def withNewChildInternal(c: Expression): PythonStr = copy(child = c)
   override def prettyName: String = "python_str"

@@ -193,13 +193,105 @@ class HllSketchParitySpec extends AnyFunSuite {
     """"([^"]*)"""".r.findAllMatchIn(arr).map(_.group(1)).toArray
   }
 
+  // values where the digit search is hard: exact ties broken by the binary
+  // tail (Java's %e rounds Double.toString's digits twice and gets them
+  // wrong), the edges of the short-decimal range (1e15 and the double below
+  // it, written 999999999999999.9; 1e-7 and its neighbours), 15- and
+  // 16-digit decimals, and powers of two where the nearest 16-digit decimal
+  // misses the narrow lower half of the round-trip interval. The strings
+  // are Python 3 repr output, from the local python3:
+  //   python3 -c "import math; print([repr(v) for v in [982321484631736448.0, ...]])"
+  // (math.nextafter(x, 0) / (x, 2*x) for the neighbours)
+  private val pystrHardCases: Seq[(Double, String)] = Seq(
+    982321484631736448.0 -> "9.823214846317364e+17",
+    -982321484631736448.0 -> "-9.823214846317364e+17",
+    8731142118995134464.0 -> "8.731142118995134e+18",
+    1e15 -> "1000000000000000.0",
+    math.nextDown(1e15) -> "999999999999999.9",
+    999999999999999.9 -> "999999999999999.9",
+    math.nextUp(1e15) -> "1000000000000000.1",
+    1e-7 -> "1e-07",
+    math.nextDown(1e-7) -> "9.999999999999998e-08",
+    math.nextUp(1e-7) -> "1.0000000000000001e-07",
+    1e22 -> "1e+22",
+    1e23 -> "1e+23",
+    math.nextDown(1e23) -> "9.999999999999997e+22",
+    123456789012.345 -> "123456789012.345",
+    1234567890.123456 -> "1234567890.123456",
+    (0.1 + 0.2) -> "0.30000000000000004",
+    math.pow(2, -1017) -> "7.120236347223045e-307",
+    math.pow(2, -957) -> "8.209073602596753e-289",
+    math.pow(2, -808) -> "5.858190679279809e-244",
+    math.pow(2, -1022) -> "2.2250738585072014e-308")
+
   test("Python str() rendering parity for doubles (incl. exponent-threshold divergences)") {
     val expected = pystrGoldens
     assert(expected.length == floatFixture.length)
-    floatFixture.zip(expected).foreach { case (d, want) =>
+    (floatFixture.toSeq.zip(expected) ++ pystrHardCases).foreach { case (d, want) =>
       assert(graft.functions.PythonStr.render(d) == want,
         s"render($d) = ${graft.functions.PythonStr.render(d)} != Python '$want'")
     }
+  }
+
+  /** Python 3 `repr(float)` from its definition, in exact BigDecimal
+    * arithmetic: the fewest significant digits p with a p-digit decimal
+    * that parses back to |v|, and of the two p-digit neighbours of |v| the
+    * round-tripping one closest to it (ties to an even last digit).
+    */
+  private def pyReprReference(v: Double): String = {
+    import java.math.{BigDecimal => JBigDecimal, MathContext, RoundingMode}
+    if (v.isNaN) return "nan"
+    if (v.isInfinite) return if (v > 0) "inf" else "-inf"
+    if (v == 0.0) return if (1.0 / v < 0) "-0.0" else "0.0"
+    val a = math.abs(v)
+    val exact = new JBigDecimal(a)
+    val c = Iterator.from(1).map { p =>
+      val lo = exact.round(new MathContext(p, RoundingMode.FLOOR))
+      val hi = exact.round(new MathContext(p, RoundingMode.CEILING))
+      (lo.doubleValue == a, hi.doubleValue == a) match {
+        case (true, true) =>
+          val byDistance = exact.subtract(lo).compareTo(hi.subtract(exact))
+          if (byDistance < 0 || (byDistance == 0 && !lo.unscaledValue.testBit(0))) Some(lo) else Some(hi)
+        case (true, false) => Some(lo)
+        case (false, true) => Some(hi)
+        case _ => None
+      }
+    }.collectFirst { case Some(x) => x }.get
+    val digits = c.unscaledValue.toString.reverse.dropWhile(_ == '0').reverse
+    val exp = c.precision - 1 - c.scale
+    val sign = if (v < 0) "-" else ""
+    if (exp >= -4 && exp < 16) {
+      val plain = c.stripTrailingZeros.toPlainString
+      sign + (if (plain.contains('.')) plain else plain + ".0")
+    } else {
+      val mant = if (digits.length > 1) s"${digits.head}.${digits.tail}" else digits
+      f"$sign${mant}e${if (exp < 0) "-" else "+"}${math.abs(exp)}%02d"
+    }
+  }
+
+  test("python_str render equals the exact repr reference on 1M fixed-seed doubles") {
+    val rng = new scala.util.Random(20231018L)
+    val twoDecimal = Iterator.fill(400000) {
+      (rng.nextLong() % 100000000000L) / 100.0
+    }
+    val randomBits = Iterator.fill(250000)(java.lang.Double.longBitsToDouble(rng.nextLong()))
+    val scaledIntegers = Iterator.fill(330000) {
+      val k = 1 + rng.nextInt(17)
+      val n = (rng.nextLong() & Long.MaxValue) % math.pow(10, k).toLong
+      s"${n}e${rng.nextInt(81) - 40}".toDouble
+    }
+    def neighbours(x: Double): Seq[Double] =
+      Iterator.iterate(x)(math.nextDown).slice(1, 4).toSeq ++ Iterator.iterate(x)(math.nextUp).take(4)
+    val powersOfTen = (-323 to 308).flatMap(e => neighbours(s"1e$e".toDouble))
+    val powersOfTwo = (-1074 to 1023).flatMap(e => neighbours(math.pow(2, e)))
+    var n = 0
+    (twoDecimal ++ randomBits ++ scaledIntegers ++ powersOfTen ++ powersOfTwo).foreach { d =>
+      val want = pyReprReference(d)
+      val got = graft.functions.PythonStr.render(d)
+      assert(got == want, s"render($d) [bits ${java.lang.Double.doubleToRawLongBits(d)}] = $got != $want")
+      n += 1
+    }
+    assert(n > 990000)
   }
 
   test("float-column sketch matches the executed reference bit-for-bit") {
